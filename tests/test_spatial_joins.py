@@ -100,6 +100,18 @@ def test_knn_join_vs_brute_force(spark, points_df, points_pd):
         assert ordered == exp[pid], pid
 
 
+def test_knn_join_fused_matches_brute_force(spark, points_df, points_pd):
+    """The grid escalation loop at the zoom picked by ``pick_knn_zoom``
+    (the input the removed ``knn_join_fused`` ran) equals brute force."""
+    refs = synth.ref_points_table(spark, 250).cache()
+    refs_pd = refs.toPandas()
+    got = SJ.knn_join(points_df, refs, k=3, zoom="auto", strategy="grid").toPandas()
+    exp = _brute_knn(points_pd, refs_pd, 3)
+    assert set(got["image_id"]) == set(exp.keys())
+    for pid, grp in got.groupby("image_id"):
+        assert list(grp.sort_values("rank")["ref_id"]) == exp[pid], pid
+
+
 def test_knn_join_np_matches_brute_force(spark, points_df, points_pd):
     """The shuffle-free numpy strategy (auto-dispatched for dim-sized
     refs) agrees with brute force, including the tie order."""
@@ -161,6 +173,37 @@ def test_knn_join_sparse_refs_escalates_rings(spark, points_df, points_pd):
         if list(grp.sort_values("rank")["ref_id"]) != exp[pid]:
             mism += 1
     assert mism == 0
+
+
+def test_knn_join_fused_sparse_refs(spark, points_df, points_pd):
+    """12 refs at the auto-picked zoom: the grid loop escalates rings
+    until every point has its true k nearest."""
+    refs = synth.ref_points_table(spark, 12).cache()
+    refs_pd = refs.toPandas()
+    got = SJ.knn_join(points_df, refs, k=2, zoom="auto", strategy="grid").toPandas()
+    exp = _brute_knn(points_pd, refs_pd, 2)
+    assert set(got["image_id"]) == set(exp.keys())
+    for pid, grp in got.groupby("image_id"):
+        assert list(grp.sort_values("rank")["ref_id"]) == exp[pid], pid
+
+
+def test_knn_join_empty_points(spark, points_df):
+    """An empty input returns an empty frame with the usual output
+    schema (regression: the grid loop raised IndexError)."""
+    refs = synth.ref_points_table(spark, 60).cache()
+    full = SJ.knn_join(points_df, refs, k=2, zoom=8, strategy="grid")
+    for broadcast in (True, False):
+        got = SJ.knn_join(points_df.limit(0), refs, k=2, zoom=8,
+                          strategy="grid", broadcast_refs=broadcast)
+        assert got.schema == full.schema
+        assert got.count() == 0
+
+
+@pytest.mark.parametrize("strategy", ["fsued", "np", "fused", "GRID"])
+def test_knn_join_unknown_strategy_raises(spark, points_df, strategy):
+    refs = synth.ref_points_table(spark, 12)
+    with pytest.raises(ValueError, match="unknown knn strategy"):
+        SJ.knn_join(points_df, refs, k=2, strategy=strategy)
 
 
 def _globe_points(spark, n, seed, id_col, lon_spread=360.0):
@@ -255,25 +298,6 @@ def test_salted_join_equals_plain_join(spark):
     assert hot.count() >= 3  # the 3 urban cells are detected as hot
 
 
-def test_knn_join_fused_matches_brute_force(spark, points_df, points_pd):
-    refs = synth.ref_points_table(spark, 250).cache()
-    refs_pd = refs.toPandas()
-    got = SJ.knn_join_fused(points_df, refs, k=3, zoom="auto").toPandas()
-    exp = _brute_knn(points_pd, refs_pd, 3)
-    assert set(got["image_id"]) == set(exp.keys())
-    for pid, grp in got.groupby("image_id"):
-        assert list(grp.sort_values("rank")["ref_id"]) == exp[pid], pid
-
-
-def test_knn_join_fused_sparse_refs(spark, points_df, points_pd):
-    refs = synth.ref_points_table(spark, 12).cache()
-    refs_pd = refs.toPandas()
-    got = SJ.knn_join_fused(points_df, refs, k=2, zoom="auto").toPandas()
-    exp = _brute_knn(points_pd, refs_pd, 2)
-    for pid, grp in got.groupby("image_id"):
-        assert list(grp.sort_values("rank")["ref_id"]) == exp[pid], pid
-
-
 def test_fused_pipeline_matches_composed(spark):
     """fused_image_tile_knn ≡ decode_stats → with_location →
     point_in_tile_join → cell → knn_join_np, row for row."""
@@ -305,44 +329,6 @@ def test_fused_pipeline_matches_composed(spark):
     b = fused.toPandas().sort_values(["image_id", "rank"]).reset_index(drop=True)
     assert len(a) == len(b) > 0
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-
-def test_fused_tile_stats_matches_plain_agg(spark):
-    """fused_image_tile_knn_tile_stats partials, summed per tile, ≡
-    the plain fused chain's filter(rank==1).groupBy(tile_id) agg:
-    counts exact, 6-dp averages equal (per-task float reassociation
-    only — the same reassociation Spark's partial agg performs)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from xutil_spark.operators.fused import (
-        fused_image_tile_knn, fused_image_tile_knn_tile_stats,
-    )
-
-    images = synth.images_table(spark, 5000, skew=True).cache()
-    tiles = synth.tiles_table(spark, zoom=10).cache()
-    refs = synth.ref_points_table(spark, 300).cache()
-
-    plain = (
-        fused_image_tile_knn(images, tiles, refs, k=3)
-        .filter(F.col("rank") == 1).groupBy("tile_id")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.round(F.avg("mean_r"), 6).alias("ar"),
-             F.round(F.avg("dist_m"), 6).alias("ad"))
-        .toPandas().sort_values("tile_id").reset_index(drop=True)
-    )
-    agg = (
-        fused_image_tile_knn_tile_stats(images, tiles, refs, k=3)
-        .groupBy("tile_id")
-        .agg(F.sum("n_images").alias("n"),
-             F.round(F.sum("sum_mean_r") / F.sum("n_images"), 6).alias("ar"),
-             F.round(F.sum("sum_dist_m") / F.sum("n_images"), 6).alias("ad"))
-        .toPandas().sort_values("tile_id").reset_index(drop=True)
-    )
-    assert list(plain["tile_id"]) == list(agg["tile_id"])
-    assert (plain["n"].values == agg["n"].values).all()
-    assert np.allclose(plain["ar"], agg["ar"], atol=1e-6)
-    assert np.allclose(plain["ad"], agg["ad"], atol=1e-6)
 
 
 def test_ring_guarantee_expr_polar_points_never_exceed_true_distance(spark):

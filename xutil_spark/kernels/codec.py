@@ -283,6 +283,22 @@ def decode_image(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     raise NotImplementedError(f"codec {fmt!r} not available")
 
 
+def decode_stats(data, w, h, fmt) -> tuple[np.ndarray, np.ndarray]:
+    """Decode each image of a batch (parallel ``bytes``/``w``/``h``/``fmt``
+    columns) → ``(means, px_sum)``: per-image RGB channel means rounded
+    to 6 dp as an (n, 3) float64 array, and the int64 sum of all pixel
+    values.  The one per-row loop of every decode-stats operator."""
+    n = len(data)
+    means = np.empty((n, 3), dtype=np.float64)
+    px_sum = np.empty(n, dtype=np.int64)
+    for i, (d, wi, hi, f) in enumerate(zip(data, w, h, fmt)):
+        px = decode_image(bytes(d), int(wi), int(hi), f)
+        m = px.reshape(-1, 3).mean(axis=0)
+        means[i] = [round(float(v), 6) for v in m]
+        px_sum[i] = int(px.astype(np.int64).sum())
+    return means, px_sum
+
+
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     """Peak signal-to-noise ratio in dB between two uint8 images
     (inf when identical) — the lossy-format acceptance gate (≥ 40 dB).

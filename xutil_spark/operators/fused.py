@@ -21,11 +21,8 @@ This is the engine's "whole-stage codegen for Python kernels": operators
 stay individually composable (and are oracle-tested individually); the
 fused path is the high-throughput shape for the common
 decode→index→join→kNN pipeline, and a pytest pins fused ≡ composed.
-
-``fused_image_tile_knn_tile_stats`` goes one step further for the
-aggregate-consuming case: the per-tile rank-1 aggregation accumulates
-INSIDE the same pass (map-side combine where the data already is), so
-each task returns |tiles|-scale partials instead of k rows per image.
+Per-tile aggregates are a plain ``filter(rank == 1).groupBy("tile_id")``
+over this operator's output.
 
 Reference lineage: tile assignment Wgs2Tile gis.go:262-267; location
 derivation FIXTURES.md §1; kNN strategy operators/spatial_join.py.
@@ -38,9 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from xutil_spark.functions.native import X_SHIFT, Z_SHIFT
 from xutil_spark.kernels import codec as K_codec
-from xutil_spark.kernels.tiles import wgs2tile
+from xutil_spark.kernels.tiles import cell_encode
 from xutil_spark.operators.spatial_join import _collect_refs, knn_searcher
 
 _OUT_FIELDS = [
@@ -65,66 +61,6 @@ _OUT_FIELDS = [
 _SLICE = 2048
 
 
-def _slice_runner(tiles: DataFrame, refs: DataFrame, k: int,
-                  tile_zoom: int, cell_zoom: int, ref_id: str):
-    """Shared per-slice kernel: decode → phash location → tile join →
-    fine cell → exact kNN.  Returns ``run_slice(b) -> tuple of numpy
-    columns or None`` plus the ref-id numpy array (for output
-    assembly); the dims are collected ONCE here (broadcast-closure
-    semantics) so both fused operators share one code path."""
-    tiles_pd = tiles.select("cell", "tile_id").toPandas()
-    t_order = np.argsort(tiles_pd["cell"].to_numpy())
-    t_cells = tiles_pd["cell"].to_numpy()[t_order]
-    t_ids = tiles_pd["tile_id"].to_numpy()[t_order]
-
-    rid, rlon, rlat, _rextra, _extras = _collect_refs(refs, ref_id, "lon", "lat")
-    search = knn_searcher(rlon, rlat, k)
-
-    def run_slice(b):
-        # --- decode (per-image zlib/raw; the only per-row loop) ---
-        n = len(b)
-        mean = np.empty((n, 3), dtype=np.float64)
-        px_sum = np.empty(n, dtype=np.int64)
-        for i, r in enumerate(b.itertuples(index=False)):
-            px = K_codec.decode_image(bytes(r.bytes), int(r.w), int(r.h), r.fmt)
-            flat = px.reshape(-1, 3)
-            m = flat.mean(axis=0)
-            mean[i, 0] = round(float(m[0]), 6)
-            mean[i, 1] = round(float(m[1]), 6)
-            mean[i, 2] = round(float(m[2]), 6)
-            px_sum[i] = int(px.astype(np.int64).sum())
-        # --- location from phash (same float64 ops as native exprs) ---
-        phash = b["phash"].to_numpy(np.int64)
-        lon = 73.5 + (phash & 0xFFFFF).astype(np.float64) / 1048576.0 * 61.0
-        lat = 18.2 + ((phash >> 20) & 0xFFFFF).astype(np.float64) / 1048576.0 * 35.3
-        # --- tile assignment at tile_zoom (inner join vs dim) ---
-        tx, ty = wgs2tile(lon, lat, tile_zoom)
-        tcell = (
-            np.int64(tile_zoom) * np.int64(1 << Z_SHIFT)
-            + (tx << np.int64(X_SHIFT)) + ty
-        )
-        pos = np.searchsorted(t_cells, tcell)
-        pos_c = np.minimum(pos, len(t_cells) - 1)
-        hit = (len(t_cells) > 0) & (t_cells[pos_c] == tcell)
-        sel = np.flatnonzero(hit)
-        if not len(sel):
-            return None
-        tile_idx = pos_c[sel]  # index into the SORTED tile dim
-        lon_s, lat_s = lon[sel], lat[sel]
-        # --- fine cell at cell_zoom ---
-        cx, cy = wgs2tile(lon_s, lat_s, cell_zoom)
-        cell = (
-            np.int64(cell_zoom) * np.int64(1 << Z_SHIFT)
-            + (cx << np.int64(X_SHIFT)) + cy
-        )
-        # --- exact kNN (shared numpy grid searcher) ---
-        rows, ridx, d, rank = search(lon_s, lat_s)
-        return (b, sel, tile_idx, lon_s, lat_s, cell, mean, px_sum,
-                rows, ridx, d, rank)
-
-    return run_slice, t_ids, rid, len(t_cells)
-
-
 def fused_image_tile_knn(
     images: DataFrame,
     tiles: DataFrame,
@@ -141,9 +77,14 @@ def fused_image_tile_knn(
     px_sum, ref_id, dist_m, rank) — numerically identical rows to the
     composed operators (same float64 operation order everywhere).
     Points outside the tile dim drop (inner-join semantics)."""
-    run_slice, t_ids, rid, _nt = _slice_runner(
-        tiles, refs, k, tile_zoom, cell_zoom, ref_id
-    )
+    # the dims are collected ONCE here (broadcast-closure semantics)
+    tiles_pd = tiles.select("cell", "tile_id").toPandas()
+    t_order = np.argsort(tiles_pd["cell"].to_numpy())
+    t_cells = tiles_pd["cell"].to_numpy()[t_order]
+    t_ids = tiles_pd["tile_id"].to_numpy()[t_order]
+
+    rid, rlon, rlat, _rextra, _extras = _collect_refs(refs, ref_id, "lon", "lat")
+    search = knn_searcher(rlon, rlat, k)
 
     out_schema = T.StructType(
         _OUT_FIELDS
@@ -154,113 +95,44 @@ def fused_image_tile_knn(
         ]
     )
 
+    def run_slice(b):
+        # --- decode (the one per-row loop) ---
+        mean, px_sum = K_codec.decode_stats(b["bytes"], b["w"], b["h"], b["fmt"])
+        # --- location from phash (same float64 ops as native exprs) ---
+        phash = b["phash"].to_numpy(np.int64)
+        lon = 73.5 + (phash & 0xFFFFF).astype(np.float64) / 1048576.0 * 61.0
+        lat = 18.2 + ((phash >> 20) & 0xFFFFF).astype(np.float64) / 1048576.0 * 35.3
+        # --- tile assignment at tile_zoom (inner join vs dim) ---
+        tcell = cell_encode(lon, lat, tile_zoom)
+        pos = np.minimum(np.searchsorted(t_cells, tcell), len(t_cells) - 1)
+        sel = np.flatnonzero(t_cells[pos] == tcell)
+        if not len(sel):
+            return None
+        lon_s, lat_s = lon[sel], lat[sel]
+        cell = cell_encode(lon_s, lat_s, cell_zoom)
+        # --- exact kNN (shared numpy grid searcher) ---
+        rows, ridx, d, rank = search(lon_s, lat_s)
+        src = sel[rows]  # output row → row of the slice
+        return pd.DataFrame({
+            "image_id": b["image_id"].to_numpy()[src],
+            "lon": lon_s[rows],
+            "lat": lat_s[rows],
+            "cell": cell[rows],
+            "tile_id": t_ids[pos[src]],
+            "mean_r": mean[src, 0],
+            "mean_g": mean[src, 1],
+            "mean_b": mean[src, 2],
+            "px_sum": px_sum[src],
+            ref_id: rid[ridx],
+            "dist_m": d,
+            "rank": rank,
+        })
+
     def run(batches):
         for full in batches:
             for s in range(0, len(full), _SLICE):
-                res = run_slice(full.iloc[s:s + _SLICE])
-                if res is None:
-                    continue
-                (b, sel, tile_idx, lon_s, lat_s, cell, mean, px_sum,
-                 rows, ridx, d, rank) = res
-                ids = b["image_id"].to_numpy()[sel]
-                yield pd.DataFrame({
-                    "image_id": ids[rows],
-                    "lon": lon_s[rows],
-                    "lat": lat_s[rows],
-                    "cell": cell[rows],
-                    "tile_id": t_ids[tile_idx][rows],
-                    "mean_r": mean[sel, 0][rows],
-                    "mean_g": mean[sel, 1][rows],
-                    "mean_b": mean[sel, 2][rows],
-                    "px_sum": px_sum[sel][rows],
-                    ref_id: rid[ridx],
-                    "dist_m": d,
-                    "rank": rank,
-                })
+                out = run_slice(full.iloc[s:s + _SLICE])
+                if out is not None:
+                    yield out
 
     return images.mapInPandas(run, schema=out_schema)
-
-
-def fused_image_tile_knn_tile_stats(
-    images: DataFrame,
-    tiles: DataFrame,
-    refs: DataFrame,
-    k: int = 3,
-    tile_zoom: int = 10,
-    cell_zoom: int = 15,
-    ref_id: str = "ref_id",
-) -> DataFrame:
-    """The fused chain with the PER-TILE rank-1 AGGREGATION pushed into
-    the same Python pass (map-side combine where the data already is):
-    each task accumulates (n_images, Σmean_r, Σdist_m) per tile across
-    ALL its batches via ``np.bincount`` on tile indices and emits ONE
-    |tiles|-scale partial frame per partition — the Python→JVM return
-    shrinks from k rows per image (GB-scale at 10^12 images) to
-    |tiles| rows per task, and the final shuffle moves only partials.
-
-    Finish with::
-
-        out.groupBy("tile_id").agg(
-            F.sum("n_images").alias("n_images"),
-            F.round(F.sum("sum_mean_r") / F.sum("n_images"), 3).alias("avg_r"),
-            F.round(F.sum("sum_dist_m") / F.sum("n_images"), 3).alias("avg_nn_dist"))
-
-    Counts are exactly equal to the unfused
-    ``filter(rank==1).groupBy(tile_id)`` aggregation; float sums
-    associate per-task instead of per-Spark-partition — the same
-    reassociation Spark's own partial aggregation performs
-    (pytest-pinned: counts exact, averages equal at 6 dp).
-
-    WHEN to prefer it: when the consumer is the aggregate and the
-    Python→JVM return crosses a NETWORK or feeds a big shuffle (the
-    10^12-image cluster case: k rows/image of Arrow return vs |tiles|
-    rows/task).  On a single node the plain fused chain measures
-    ~15-20% FASTER (interleaved trials at pinned local[32]): its
-    per-slice yields stream back overlapped with the JVM feeding the
-    next slice, while this variant holds its output until the
-    partition ends — the bench keeps the plain chain for that
-    reason."""
-    run_slice, t_ids, _rid, n_tiles = _slice_runner(
-        tiles, refs, k, tile_zoom, cell_zoom, ref_id
-    )
-
-    schema = T.StructType([
-        T.StructField("tile_id", T.StringType(), False),
-        T.StructField("n_images", T.LongType(), False),
-        T.StructField("sum_mean_r", T.DoubleType(), False),
-        T.StructField("sum_dist_m", T.DoubleType(), False),
-    ])
-
-    def run(batches):
-        # accumulate the rank-1 (tile_idx, mean_r, dist) triples per
-        # slice and reduce ONCE per partition — a per-slice bincount
-        # over the full |tiles| dim would pay 3 dim-sized allocations
-        # per 2k rows (measured ~15% slower at local[32])
-        tis, mrs, ds = [], [], []
-        for full in batches:
-            for s in range(0, len(full), _SLICE):
-                res = run_slice(full.iloc[s:s + _SLICE])
-                if res is None:
-                    continue
-                (_b, sel, tile_idx, _lon, _lat, _cell, mean, _px,
-                 rows, _ridx, d, rank) = res
-                top = rank == 1
-                tis.append(tile_idx[rows[top]])
-                mrs.append(mean[sel, 0][rows[top]])
-                ds.append(d[top])
-        if not tis:
-            return
-        ti = np.concatenate(tis)
-        cnt = np.bincount(ti, minlength=n_tiles)
-        sum_r = np.bincount(ti, weights=np.concatenate(mrs), minlength=n_tiles)
-        sum_d = np.bincount(ti, weights=np.concatenate(ds), minlength=n_tiles)
-        nz = np.flatnonzero(cnt)
-        if len(nz):
-            yield pd.DataFrame({
-                "tile_id": t_ids[nz],
-                "n_images": cnt[nz],
-                "sum_mean_r": sum_r[nz],
-                "sum_dist_m": sum_d[nz],
-            })
-
-    return images.mapInPandas(run, schema=schema)

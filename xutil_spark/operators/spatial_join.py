@@ -7,9 +7,11 @@ numpy-vectorized refinement UDFs where exact geometry is needed:
 * ``point_in_tile_join``   — pure equi-join on the packed cell id.
 * ``point_in_polygon_join``— filter-refine: polygon → covering cells
   (bbox from geo.go:298-321 semantics) → equi-join → exact ray-cast.
-* ``knn_join``             — grid join on neighbor rings with *provable*
-  completeness: rings escalate until the k-th distance is below the
-  guaranteed-covered radius.
+* ``knn_join``             — exact kNN, one path per refs shape: refs
+  that fit a broadcast (≤200k rows) run the shuffle-free numpy search
+  (``knn_join_np``); all others run the grid join on neighbor blocks
+  with *provable* completeness: zoom escalates until the k-th distance
+  is below the guaranteed-covered radius.
 * ``distance_join``        — range variant (dist ≤ r) of the grid join.
 * ``salt_hot_cells``       — explicit skew handling: histogram the cell
   key, salt the heavy hitters, explode the dim side (north rule).
@@ -245,9 +247,11 @@ def _ring_guarantee_expr(lat_col: Column, zoom: int, ring: int = 1) -> Column:
     return F.least(gx, gy)
 
 
+_KNN_MAX_ZOOM = 14  # finest starting zoom pick_knn_zoom considers
+
+
 def pick_knn_zoom(refs: DataFrame, k: int,
-                  ref_lon: str = "lon", ref_lat: str = "lat",
-                  max_zoom: int = 14) -> int:
+                  ref_lon: str = "lon", ref_lat: str = "lat") -> int:
     """Choose the starting zoom so a 3×3 block holds ~2k refs on
     average: one tiny aggregation on the (dim-sized) refs table.  Too
     fine a grid wastes escalation rounds; too coarse floods the window
@@ -260,75 +264,12 @@ def pick_knn_zoom(refs: DataFrame, k: int,
     n = max(int(row["n"]), 1)
     dlon = max(float(row["lo2"]) - float(row["lo1"]), 1e-6)
     dlat = max(float(row["la2"]) - float(row["la1"]), 1e-6)
-    for z in range(max_zoom, 0, -1):
+    for z in range(_KNN_MAX_ZOOM, 0, -1):
         tiles_x = max(dlon / (360.0 / 2 ** z), 1.0)
         tiles_y = max(dlat / (360.0 / 2 ** z), 1.0)  # ~lat span below 60°
         if 9.0 * n / (tiles_x * tiles_y) >= 2.0 * k:
             return z
     return 1
-
-
-def knn_join_fused(
-    points: DataFrame,
-    refs: DataFrame,
-    k: int,
-    zoom: int | str = "auto",
-    point_id: str = "image_id",
-    ref_id: str = "ref_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    ref_lon: str = "lon",
-    ref_lat: str = "lat",
-) -> DataFrame:
-    """Exact kNN in TWO actions (vs the escalation loop's ~4/round):
-
-    one localCheckpoint of the input, then a single DAG =
-    ``grid-round top-k (per-point guarantee) ∪ brute-forced stragglers``.
-    The straggler side anti-joins the guaranteed ids and cross-joins the
-    broadcast refs — exact for any straggler count, no driver counts, no
-    per-round barriers.  The grid window's shuffle is reused between the
-    two branches (ReusedExchange), so the recompute is almost free.
-
-    Requires a broadcastable refs table (the straggler side is a
-    broadcast nested-loop join); for huge refs use ``knn_join``.
-    Preferred at high parallelism: serial driver time is O(1).
-    """
-    if zoom == "auto":
-        zoom = pick_knn_zoom(refs, k, ref_lon, ref_lat)
-    refs_c, extras = _refs_with_cell(refs, zoom, ref_id, ref_lon, ref_lat)
-    refs_dim = F.broadcast(refs_c)
-    pts = with_cell(points, zoom, lon, lat, out="_pcell").localCheckpoint()
-    out_cols = list(points.columns) + [ref_id] + extras + ["dist_m", "rank"]
-    w = Window.partitionBy(point_id).orderBy(
-        F.round(F.col("dist_m"), 3).asc(), F.col(ref_id).asc()
-    )
-    dist = native.haversine_m(F.col(lon), F.col(lat), F.col("_rlon"), F.col("_rlat"))
-    kth = F.max(F.when(F.col("rank") == k, F.col("dist_m"))).over(
-        Window.partitionBy(point_id)
-    )
-    grid_topk = (
-        _explode_neighbors(pts, F.col("_pcell"), zoom, 1)
-        .join(refs_dim, F.col("_ncell") == F.col("_rcell"), "inner")
-        .withColumn("dist_m", dist)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("_kth", kth)
-    )
-    done = grid_topk.filter(
-        F.col("_kth") <= _ring_guarantee_expr(F.col(lat), zoom, 1)
-    ).select(*out_cols)
-    done_ids = grid_topk.filter(
-        F.col("_kth") <= _ring_guarantee_expr(F.col(lat), zoom, 1)
-    ).select(point_id)
-    stragglers = pts.join(done_ids.distinct(), on=point_id, how="left_anti")
-    brute_topk = (
-        stragglers.join(refs_dim, F.lit(True), "inner")
-        .withColumn("dist_m", dist)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols)
-    )
-    return done.unionByName(brute_topk)
 
 
 def knn_join_np(
@@ -485,21 +426,22 @@ def knn_searcher(rlon, rlat, k: int):
         rorder = np.argsort(rcell, kind="stable")  # id order within a cell
         rcell_s = rcell[rorder]
 
-    def hav_pairs(pi, ri, plon, plat, pcos):
-        """Haversine over (point-idx, ref-idx) pair arrays; trig for
-        both endpoints pre-computed (same float64 expression order as
-        the original per-pair form — cos values are identical doubles,
+    def hav(plon, plat, pcos, qlon, qlat, qcos):
+        """Haversine between broadcastable point / ref arrays; cos(lat)
+        of both endpoints pre-computed (same float64 expression order
+        as ``native.haversine_m`` — cos values are identical doubles,
         so distances are bit-identical)."""
-        dlat = (rlat[ri] - plat[pi]) * rad
-        dlon = (rlon[ri] - plon[pi]) * rad
+        dlat = (qlat - plat) * rad
+        dlon = (qlon - plon) * rad
         a = (
             np.sin(dlat / 2) * np.sin(dlat / 2)
-            + np.sin(dlon / 2) * np.sin(dlon / 2) * pcos[pi] * rcos[ri]
+            + np.sin(dlon / 2) * np.sin(dlon / 2) * pcos * qcos
         )
         return two_r * np.arctan2(np.sqrt(a), np.sqrt(1.0 - a))
 
     def topk_grid(plon, plat, pcos):
-        """Returns (resolved_out, straggler_mask)."""
+        """Returns ((pt_rows, ref_idx, dist_m, rank) of the resolved
+        points, straggler_mask)."""
         b = len(plon)
         px = np.clip(((plon - lon0) / span_x).astype(np.int64), 0, nx - 1)
         py = np.clip(((plat - lat0) / span_y).astype(np.int64), 0, ny - 1)
@@ -540,7 +482,8 @@ def knn_searcher(rlon, rlat, k: int):
         pcum = np.concatenate(([0], np.cumsum(b_per_pt)))[:-1]
         pair_off = np.arange(n_pairs) - np.repeat(pcum, b_per_pt)
         pair_ref = rorder[rflat[np.repeat(ucum[uinv[porder]], b_per_pt) + pair_off]]
-        d = hav_pairs(pair_pt, pair_ref, plon, plat, pcos)
+        d = hav(plon[pair_pt], plat[pair_pt], pcos[pair_pt],
+                rlon[pair_ref], rlat[pair_ref], rcos[pair_ref])
         key = np.rint(np.round(d, 3) * 1000.0).astype(np.int64) * n_refs + pair_ref
         o = np.lexsort((key, pair_pt))
         spt, sref, sd = pair_pt[o], pair_ref[o], d[o]
@@ -570,18 +513,12 @@ def knn_searcher(rlon, rlat, k: int):
         guarantee = np.minimum(gx, _M_PER_DEG_HAV * span_y)
         resolved = (cnt >= kk) & (kth_d <= guarantee)
         take = (pos < kk) & resolved[spt]
-        return (spt[take], sref[take], sd[take]), ~resolved
+        return (spt[take], sref[take], sd[take], pos[take] + 1), ~resolved
 
     def brute(plon, plat, pcos):
         """Vectorized brute-force top-k for m stragglers (m×R)."""
-        dlat = (rlat[None, :] - plat[:, None]) * rad
-        dlon = (rlon[None, :] - plon[:, None]) * rad
-        a = (
-            np.sin(dlat / 2) * np.sin(dlat / 2)
-            + np.sin(dlon / 2) * np.sin(dlon / 2)
-            * pcos[:, None] * rcos[None, :]
-        )
-        d = two_r * np.arctan2(np.sqrt(a), np.sqrt(1.0 - a))
+        d = hav(plon[:, None], plat[:, None], pcos[:, None],
+                rlon[None, :], rlat[None, :], rcos[None, :])
         key = (
             np.rint(np.round(d, 3) * 1000.0).astype(np.int64) * n_refs
             + np.arange(n_refs, dtype=np.int64)[None, :]
@@ -603,25 +540,14 @@ def knn_searcher(rlon, rlat, k: int):
             return rows, ridx, d, np.tile(np.arange(1, kk + 1), len(plon))
         parts = []
         grid_out, straggler = topk_grid(plon, plat, pcos)
-        if grid_out is not None and len(grid_out[0]):
-            gp, gr, gd = grid_out
-            # pos within segment restarts at each point → rank
-            newseg = np.empty(len(gp), dtype=bool)
-            newseg[0] = True
-            newseg[1:] = gp[1:] != gp[:-1]
-            seg_first = np.flatnonzero(newseg)
-            seg_ids = np.cumsum(newseg) - 1
-            rank = np.arange(len(gp)) - seg_first[seg_ids] + 1
-            parts.append((gp, gr, gd, rank))
+        if grid_out is not None:
+            parts.append(grid_out)
         sidx = np.flatnonzero(straggler)
         if len(sidx):
             rows, ridx, d = brute(plon[sidx], plat[sidx], pcos[sidx])
             parts.append(
                 (sidx[rows], ridx, d, np.tile(np.arange(1, kk + 1), len(sidx)))
             )
-        if not parts:
-            z = np.empty(0, dtype=np.int64)
-            return z, z, np.empty(0), z
         return tuple(np.concatenate(cols) for cols in zip(*parts))
 
     # Point-chunked driver: the grid pass builds a pair list (points ×
@@ -654,7 +580,6 @@ def knn_join(
     refs: DataFrame,
     k: int,
     zoom: int | str = 12,
-    min_zoom: int = 0,
     point_id: str = "image_id",
     ref_id: str = "ref_id",
     broadcast_refs: bool = True,
@@ -676,30 +601,23 @@ def knn_join(
     A point RESOLVES when it has ≥ k candidates AND its k-th distance is
     ≤ the round's guaranteed-covered radius — provably equal to brute
     force.  At zoom 0 the block covers the whole world → termination and
-    exactness are unconditional (≤ zoom+1 rounds).  ``remaining`` is
-    localCheckpoint'ed per round to keep the plan lineage flat.
+    exactness are unconditional (≤ zoom+1 rounds); once remaining × refs
+    ≤ 50M pairs of broadcast refs, the tail is brute-forced in one
+    round.  ``remaining`` is localCheckpoint'ed per round to keep the
+    plan lineage flat.
 
-    Output: point columns + (ref_id, dist_m, rank 1..k).
+    Output: point columns + (ref_id, dist_m, rank 1..k); an empty input
+    gives an empty frame of that schema.
 
-    ``strategy``: "auto" dispatches dim-sized refs (≤200k rows) to the
-    shuffle-free numpy path (``knn_join_np``), larger broadcastable refs
-    to the two-action fused plan (``knn_join_fused`` — no per-round
-    driver barriers); the escalation loop here serves non-broadcastable
-    refs and explicit ``strategy="grid"``.  "np"/"fused"/"grid" force.
+    ``strategy``: "auto" sends broadcastable refs of ≤200k rows to the
+    shuffle-free numpy path (``knn_join_np``) and all other refs to the
+    escalation loop here; "grid" forces the loop.
     """
-    if strategy == "auto":
-        if broadcast_refs and refs.count() <= 200_000:
-            strategy = "np"
-        elif broadcast_refs:
-            strategy = "fused"
-        else:
-            strategy = "grid"
-    if strategy == "np":
+    if strategy not in ("auto", "grid"):
+        raise ValueError(f"unknown knn strategy {strategy!r}")
+    if strategy == "auto" and broadcast_refs and refs.count() <= 200_000:
         return knn_join_np(points, refs, k, point_id, ref_id,
                            lon, lat, ref_lon, ref_lat)
-    if strategy == "fused":
-        return knn_join_fused(points, refs, k, zoom, point_id, ref_id,
-                              lon, lat, ref_lon, ref_lat)
     if zoom == "auto":
         zoom = pick_knn_zoom(refs, k, ref_lon, ref_lat)
     brute_budget = 50_000_000  # straggler pairs worth one broadcast join
@@ -715,12 +633,22 @@ def knn_join(
     n_remaining = remaining.count()
     n_refs: int | None = None
     resolved_parts: list[DataFrame] = []
-    point_cols = [c for c in points.columns]
-    out_cols = point_cols + [ref_id] + extras + ["dist_m", "rank"]
+    out_cols = list(points.columns) + [ref_id] + extras + ["dist_m", "rank"]
     w = Window.partitionBy(point_id).orderBy(
         F.round(F.col("dist_m"), 3).asc(), F.col(ref_id).asc()
     )
-    for zoom_r in range(zoom, min_zoom - 1, -1):
+
+    def topk(cand: DataFrame) -> DataFrame:
+        return (
+            cand.withColumn(
+                "dist_m",
+                native.haversine_m(F.col(lon), F.col(lat), F.col("_rlon"), F.col("_rlat")),
+            )
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+        )
+
+    for zoom_r in range(zoom, 0, -1):
         if n_remaining == 0:
             break
         # straggler cutoff: once remaining×refs fits one broadcast join,
@@ -728,50 +656,27 @@ def knn_join(
         # collapses the long escalation tail into a single stage
         if n_refs is None:
             n_refs = refs_c.count()
-        if zoom_r == min_zoom or (
-            broadcast_refs and n_remaining * n_refs <= brute_budget
-        ):
-            cand = remaining.join(refs_dim, F.lit(True), "inner").withColumn(
-                "dist_m",
-                native.haversine_m(F.col(lon), F.col(lat), F.col("_rlon"), F.col("_rlat")),
-            )
-            topk = (
-                cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-            )
-            resolved_parts.append(topk.select(*out_cols))
+        if broadcast_refs and n_remaining * n_refs <= brute_budget:
             break
-        cand = (
-            _explode_neighbors(
-                remaining,
-                native.cell_parent(F.col("_pcell"), zoom, zoom_r),
-                zoom_r,
-                1,
-            )
-            .join(
-                refs_dim,
-                F.col("_ncell") == native.cell_parent(F.col("_rcell"), zoom, zoom_r),
-                "inner",
-            )
-            .withColumn(
-                "dist_m",
-                native.haversine_m(F.col(lon), F.col(lat), F.col("_rlon"), F.col("_rlat")),
-            )
+        cand = _explode_neighbors(
+            remaining,
+            native.cell_parent(F.col("_pcell"), zoom, zoom_r),
+            zoom_r,
+            1,
+        ).join(
+            refs_dim,
+            F.col("_ncell") == native.cell_parent(F.col("_rcell"), zoom, zoom_r),
+            "inner",
         )
         # _kth is null iff the point has < k candidates, so one window
         # column does both the completeness and the guarantee check
         kth = F.max(F.when(F.col("rank") == k, F.col("dist_m"))).over(
             Window.partitionBy(point_id)
         )
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("_kth", kth)
-        )
         # checkpoint the round's resolved rows: they're consumed twice
         # (anti-join ids + final union) — without this every round's
         # window re-executes at the final action
-        done = topk.filter(
+        done = topk(cand).withColumn("_kth", kth).filter(
             F.col("_kth") <= _ring_guarantee_expr(F.col(lat), zoom_r, 1)
         ).select(*out_cols).localCheckpoint()
         resolved_parts.append(done)
@@ -779,6 +684,13 @@ def knn_join(
         remaining = remaining.join(done_ids, on=point_id, how="left_anti").localCheckpoint()
         n_remaining = remaining.count()
 
+    if n_remaining or not resolved_parts:
+        # the tail, brute-forced (zoom 0's block is the whole world).
+        # On an empty input this is a lazy plan over zero rows: the
+        # output schema, no extra Spark job
+        resolved_parts.append(
+            topk(remaining.join(refs_dim, F.lit(True), "inner")).select(*out_cols)
+        )
     out = resolved_parts[0]
     for part in resolved_parts[1:]:
         out = out.unionByName(part)
@@ -1369,8 +1281,8 @@ def snap_to_segments(
     map-matching primitive (point → road).  Inner semantics: points
     with no segment inside the radius are absent from the output.
 
-    Escalating zoom cascade in ONE fused DAG (the ``knn_join_fused``
-    pattern — one localCheckpoint, no per-round driver actions):
+    Escalating zoom cascade in ONE DAG (one localCheckpoint, no
+    per-round driver actions):
 
     1. **Fine levels** (``fine_zoom`` down to ``zoom``, step −3, the
        top auto-picked by ``pick_snap_fine_zoom`` so the finest

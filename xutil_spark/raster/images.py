@@ -44,17 +44,10 @@ def decode_stats(images: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            stats = {k: [] for k in ("mean_r", "mean_g", "mean_b", "px_sum")}
-            for r in b.itertuples(index=False):
-                px = K_codec.decode_image(bytes(r.bytes), int(r.w), int(r.h), r.fmt)
-                m = px.reshape(-1, 3).mean(axis=0)
-                stats["mean_r"].append(round(float(m[0]), 6))
-                stats["mean_g"].append(round(float(m[1]), 6))
-                stats["mean_b"].append(round(float(m[2]), 6))
-                stats["px_sum"].append(int(px.astype(np.int64).sum()))
+            means, px_sum = K_codec.decode_stats(b["bytes"], b["w"], b["h"], b["fmt"])
             out = b[keep_names].reset_index(drop=True)
-            for k, v in stats.items():
-                out[k] = v
+            out["mean_r"], out["mean_g"], out["mean_b"] = means.T
+            out["px_sum"] = px_sum
             yield out
 
     return images.mapInPandas(run, schema=schema)
